@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the listener bus drain, which Spark keeps package-private: the
+  * traced run must see every job and task event before it reads them.
+  */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
